@@ -1,4 +1,5 @@
-"""Iterative graph ranking: fixed-point PageRank.
+"""Iterative graph operators: ranking, communities, cohesion, reach and
+distance, all driven by one fixpoint loop (`_iterate`).
 
 Beyond-reference (SURVEY.md §2 north star). Web-scale pretraining
 corpora are curated with graph quality signals — Common Crawl ranks
@@ -35,20 +36,37 @@ Scale shape (the iterative-Spark discipline):
     one (dst) aggregate — both AQE-planned shuffles of long pairs;
     contributions are combinable, so map-side partial aggregation
     bounds the dst shuffle at (partitions × distinct dst).
-  * Lineage is truncated with ``localCheckpoint`` each iteration by
-    default (same idiom as dedup._cc_star_contraction; cadence
-    tunable) — without cuts the plan doubles per round and Catalyst
-    analysis time explodes by ~2^k.
-    ``reliable=True`` swaps every cut to a reliable ``checkpoint()``
-    against the session's checkpoint dir for executor-loss recovery —
-    the cluster setting; localCheckpoint (default) trades that for
-    zero-copy speed, the right call single-node.
-  * Fixed iteration count, not convergence polling: 10 rounds of
-    0.85-damped propagation bound the unconverged mass by 0.85^10 ≈
-    0.2% — and a FIXED loop is what an SQL oracle can replay exactly.
+  * Every round loop of the module runs through `_iterate`, whose
+    contract is three rules:
+      - cut cadence: the state after round i is lineage-cut
+        (``localCheckpoint``, the idiom of dedup._cc_star_contraction)
+        when ``cut_every`` divides i — without cuts the plan doubles
+        per round and Catalyst analysis time explodes by ~2^k.
+        ``reliable=True`` swaps every cut to a reliable
+        ``checkpoint()`` against the session's checkpoint dir for
+        executor-loss recovery — the cluster setting; localCheckpoint
+        (default) trades that for zero-copy speed, the right call
+        single-node;
+      - final round: its state is never cut — it goes back one step
+        of lineage off the last cut, and the caller's own action
+        computes it;
+      - fixpoint probe: for a MONOTONE recurrence (k_core and k_truss
+        only shrink, coreness and frontier sssp values only decrease)
+        a limit-1 emptiness check of the change against the previous
+        cut state, taken only on cut rounds and never on the last one,
+        ends the loop early. Monotonicity is what makes it sound:
+        equal states ``cut_every`` rounds apart mean every round in
+        between, and every later one, is the identity.
+  * Round counts are fixed upper bounds, not convergence targets: a
+    FIXED loop is what an SQL oracle can replay exactly, and an early
+    exit skips only identity rounds. 10 rounds of 0.85-damped PageRank
+    bound the unconverged mass by 0.85^10 ≈ 0.2%.
 """
 
 from __future__ import annotations
+
+import itertools
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -77,6 +95,103 @@ def _cut(df: DataFrame, reliable: bool) -> DataFrame:
             "before running the iterative operator"
         )
     return df.checkpoint()
+
+
+def _iterate(
+    state,
+    step: Callable,
+    rounds: int,
+    reliable: bool,
+    cut_every: int = 1,
+    fixpoint: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
+):
+    """``state = step(state)`` for ``rounds`` rounds: the one round loop
+    of the iterative operators. It owns their lineage cuts and their
+    fixpoint exit (module docstring):
+
+    * the state after round i (1-based) is cut when ``cut_every``
+      divides i, except after the last round; ``cut_every=0`` leaves
+      every cut to the step, whose state may then be any value (hits
+      cuts its raw scores before each normalizer);
+    * on a cut round that is not the last, ``fixpoint(anchor, state)``
+      builds the change of ``state`` against ``anchor`` — the state at
+      the previous cut, or the start state — and an empty change ends
+      the loop. It reads cut states (or the start state), so it re-runs
+      no round. Pass it only for a monotone recurrence;
+    * a step that returns its input object has found the fixpoint
+      itself (delta label propagation's touch count) and also ends the
+      loop."""
+    anchor = state
+    for i in range(1, rounds + 1):
+        new = step(state)
+        if new is state:
+            break
+        state = new
+        if i == rounds or not cut_every or i % cut_every:
+            continue
+        state = _cut(state, reliable)
+        if fixpoint is not None:
+            if not fixpoint(anchor, state).limit(1).collect():
+                break
+            anchor = state
+    return state
+
+
+def _edge_list(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    reliable: bool,
+    assume_normalized: bool = False,
+    cut_input: bool = True,
+    w=None,
+    combine: Callable | None = None,
+    keep: list[str] | tuple[str, ...] = (),
+) -> DataFrame:
+    """(src, dst[, w][, keep…]): the edge list a round loop re-scans
+    every round, prepared once. NULL endpoints and self-loops are
+    dropped and duplicate edges collapse — by DISTINCT, or, when ``w``
+    (a weight column expression) is given, by ``combine`` over w with
+    NULL weights dropped. The result is materialized (`_cut`): uncut,
+    every round would re-run the caller's whole build chain.
+
+    ``assume_normalized=True`` vouches the input already has that shape
+    (a shared artifact's contract) and only renames, passing the
+    ``keep`` columns through; ``cut_input=False`` additionally vouches
+    it is materialized and skips the cut."""
+    cols = [F.col(src).alias("src"), F.col(dst).alias("dst")]
+    if w is not None:
+        cols.append(w.alias("w"))
+    if assume_normalized:
+        e = edges.select(*cols, *keep)
+        return _cut(e, reliable) if cut_input else e
+    e = (
+        edges.select(*cols)
+        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .filter(F.col("src") != F.col("dst"))
+    )
+    if w is None:
+        e = e.distinct()
+    else:
+        e = (
+            e.filter(F.col("w").isNotNull())
+            .groupBy("src", "dst")
+            .agg(combine("w").alias("w"))
+        )
+    return _cut(e, reliable)
+
+
+def _endpoints(e: DataFrame) -> DataFrame:
+    """(node): every endpoint of a (src, dst) edge list, duplicates kept."""
+    return e.select(F.col("src").alias("node")).unionByName(
+        e.select(F.col("dst").alias("node"))
+    )
+
+
+def _node_set(e: DataFrame, reliable: bool) -> DataFrame:
+    """(node): the distinct endpoints of a (src, dst) edge list,
+    materialized — the node-level state every round loop starts from."""
+    return _cut(_endpoints(e).distinct(), reliable)
 
 
 #: the largest fixed-point scale :func:`pagerank` accepts (see its
@@ -251,7 +366,7 @@ def pagerank(
     must be the UNFILTERED artifact the node set was built from (a
     caller filtering the edge list the way g14 does must recompute).
     ``debug_vouch=True`` re-verifies the vouch at call time (count
-    equality + endpoint containment, two extra actions) and raises
+    equality + containment both ways, three extra actions) and raises
     loudly on a mismatch — run it once when wiring a new consumer,
     leave it off in production."""
     if not 0 < damping_pct < 100:
@@ -303,41 +418,12 @@ def pagerank(
                 "rank*w could wrap int64; lower scale or re-vouch the "
                 "artifact with re-scaled weights"
             )
-    if assume_normalized:
-        # skip the dedup/filter SEMANTICS, but keep the cut unless the
-        # caller vouches the input is materialized (cut_input=False):
-        # the loop scans the edge list every iteration, and without
-        # either, each scan re-runs the caller's whole build chain
-        cols = [F.col(src).alias("src"), F.col(dst).alias("dst")]
-        if weight is not None:
-            cols.append(F.col(weight).cast("bigint").alias("w"))
-        if has_norm:
-            cols.append(F.col(norm_col))
-        e = edges.select(*cols)
-        if cut_input:
-            e = _cut(e, reliable)
-    elif weight is None:
-        e = _cut(
-            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .filter(F.col("src") != F.col("dst"))
-            .distinct(),
-            reliable,
-        )
-    else:
-        e = _cut(
-            edges.select(
-                F.col(src).alias("src"),
-                F.col(dst).alias("dst"),
-                F.col(weight).cast("bigint").alias("w"),
-            )
-            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .filter(F.col("src") != F.col("dst"))
-            .filter(F.col("w").isNotNull())
-            .groupBy("src", "dst")
-            .agg(F.sum("w").alias("w")),
-            reliable,
-        )
+    e = _edge_list(
+        edges, src, dst, reliable, assume_normalized, cut_input,
+        w=None if weight is None else F.col(weight).cast("bigint"),
+        combine=F.sum,
+        keep=[norm_col] if has_norm else [],
+    )
     if weight is not None and not has_norm:
         # positive weights only (no random-walk meaning otherwise) and
         # an int64 headroom check: the per-edge term multiplies
@@ -359,12 +445,7 @@ def pagerank(
                 "ERROR in DuckDB; lower scale or re-scale weights"
             )
     if nodes is None:
-        nodes = _cut(
-            e.select(F.col("src").alias("node"))
-            .unionByName(e.select(F.col("dst").alias("node")))
-            .distinct(),
-            reliable,
-        )
+        nodes = _node_set(e, reliable)
         n = nodes.count()
     else:
         nodes = nodes.select(F.col(nodes.columns[0]).alias("node"))
@@ -372,7 +453,10 @@ def pagerank(
         if debug_vouch:
             # opt-in loud-failure re-check of the vouching contract
             # (r15, per the r14 advice): a wrong vouch otherwise
-            # silently misranks. Two bounded actions over cut frames.
+            # silently misranks. Three bounded actions over cut frames:
+            # the count, then set equality as containment both ways —
+            # a node frame built from UNFILTERED edges and handed
+            # filtered ones (the g14 misuse) fails the second probe.
             actual = nodes.count()
             if n != actual:
                 raise ValueError(
@@ -381,17 +465,25 @@ def pagerank(
                     "on different edges"
                 )
             stray = (
-                e.select(F.col("src").alias("node"))
-                .unionByName(e.select(F.col("dst").alias("node")))
-                .join(nodes, "node", "left_anti")
-                .limit(1)
-                .collect()
+                _endpoints(e).join(nodes, "node", "left_anti")
+                .limit(1).collect()
             )
             if stray:
                 raise ValueError(
                     f"edge endpoint {stray[0][0]!r} is missing from "
                     "the vouched nodes frame — the edges are not the "
                     "unfiltered artifact the node set was built from"
+                )
+            extra = (
+                nodes.join(_endpoints(e), "node", "left_anti")
+                .limit(1).collect()
+            )
+            if extra:
+                raise ValueError(
+                    f"vouched node {extra[0][0]!r} is no endpoint of "
+                    "any edge — the node set was built from more edges "
+                    "than were passed; a filtered edge list needs its "
+                    "own node set"
                 )
     if n == 0:
         # the node set is the endpoints of SURVIVING edges — an input of
@@ -466,13 +558,14 @@ def pagerank(
     zero = flags.select(
         "node", F.lit(0).cast("bigint").alias("c"), "is_seed"
     )
-    ranks = flags.select(
+    start = flags.select(
         "node", (F.col("is_seed") * F.lit(init)).alias("rank_fp")
     )
     contrib_expr = (
         "rank_fp DIV od" if weight is None else "(rank_fp * w) DIV ws"
     )
-    for i in range(iterations):
+
+    def step(ranks: DataFrame) -> DataFrame:
         contribs = (
             e_od.join(
                 ranks.select(F.col("node").alias("src"), "rank_fp"), "src"
@@ -483,7 +576,7 @@ def pagerank(
                 F.lit(0).cast("bigint").alias("is_seed"),
             )
         )
-        ranks = (
+        return (
             contribs.unionByName(zero)
             .groupBy("node")
             # max(is_seed): the flag is constant per node (0 on contrib
@@ -501,16 +594,15 @@ def pagerank(
                 ).alias("rank_fp"),
             )
         )
-        # lineage cut cadence: each cut is an eager materialization
-        # job, so raising checkpoint_every saves k-1 jobs per k rounds
-        # (measured 4.1 s at k=1 vs 1.9 s at k=5 on 1.1M edges,
-        # identical ranks). Default stays 1: on some edge-plan shapes
-        # Spark 4.1's InferFiltersFromConstraints blows up on the
-        # deep union+aggregate chain an uncut k>1 plan accumulates —
-        # raise it only for plans you've exercised
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            ranks = _cut(ranks, reliable)
-    return ranks
+
+    # lineage cut cadence: each cut is an eager materialization job,
+    # so raising checkpoint_every saves k-1 jobs per k rounds (measured
+    # 4.1 s at k=1 vs 1.9 s at k=5 on 1.1M edges, identical ranks).
+    # Default stays 1: on some edge-plan shapes Spark 4.1's
+    # InferFiltersFromConstraints blows up on the deep union+aggregate
+    # chain an uncut k>1 plan accumulates — raise it only for plans
+    # you've exercised
+    return _iterate(start, step, iterations, reliable, checkpoint_every)
 
 
 def k_core(
@@ -548,54 +640,34 @@ def k_core(
     in `pagerank` (``od``/``w``/``ws`` columns, if present, are ignored
     — degrees are recounted per round by construction). Survivor sets
     shrink monotonically, so an unchanged round is the fixpoint and
-    every remaining round the identity — a limit-1 anti-join probe
-    per round early-exits them (r15), identical output."""
+    every remaining round the identity — `_iterate`'s limit-1
+    anti-join probe per cut round early-exits them, identical
+    output."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if rounds < 1:
         raise ValueError(f"need >= 1 round, got {rounds}")
-    if assume_normalized:
-        e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        if cut_input:
-            e = _cut(e, reliable)
-    else:
-        e = _cut(
-            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .filter(F.col("src") != F.col("dst"))
-            .distinct(),
-            reliable,
-        )
-    survivors = _cut(
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct(),
-        reliable,
-    )
-    deg = None
-    for i in range(rounds):
+    e = _edge_list(edges, src, dst, reliable, assume_normalized, cut_input)
+
+    def peel(survivors: DataFrame) -> DataFrame:
         e_s = e.join(
             survivors.select(F.col("node").alias("src")), "src", "semi"
         ).join(survivors.select(F.col("node").alias("dst")), "dst", "semi")
-        deg = e_s.groupBy(F.col("src").alias("node")).agg(
-            F.count("*").alias("deg")
+        return (
+            e_s.groupBy(F.col("src").alias("node"))
+            .agg(F.count("*").alias("deg"))
+            .filter(F.col("deg") >= k)
         )
-        deg = _cut(deg.filter(F.col("deg") >= k), reliable)
-        new_survivors = deg.select("node")
-        if i + 1 < rounds:
-            # fixpoint probe (r15): survivors only shrink, so an empty
-            # prev-minus-new difference makes every remaining round the
-            # identity (same survivor set => same degrees) — one
-            # limit-1 anti-join over the two cut frames decides.
-            dropped = survivors.join(
-                new_survivors, "node", "left_anti"
-            ).limit(1)
-            survivors = new_survivors
-            if not dropped.collect():
-                break
-        else:
-            survivors = new_survivors
-    return deg
+
+    def dropped(prev: DataFrame, new: DataFrame) -> DataFrame:
+        # survivors only shrink: nothing dropped since the last cut
+        # makes every remaining round the identity (same survivor set
+        # => same degrees)
+        return prev.select("node").join(new, "node", "left_anti")
+
+    return _iterate(
+        _node_set(e, reliable), peel, rounds, reliable, fixpoint=dropped
+    )
 
 
 def k_core_sql(edge_sql: str, k: int = 3, rounds: int = 6) -> str:
@@ -660,12 +732,11 @@ def coreness(
     one equi-join of the (node, c) state onto edges + one per-node
     window bounded by the node's DEGREE (never global) + one
     combinable max; state is two longs per node; lineage cut per
-    ``checkpoint_every`` rounds; ``reliable`` as in `pagerank`. An
-    unchanged round is the fixpoint (the recurrence is a pure
-    function of the state), so a limit-1 probe per round early-exits
-    the remaining rounds — identical output, and on graphs that
-    converge in 1-2 rounds (the trade backbone does) the fixed round
-    budget stops costing anything (r15)."""
+    ``checkpoint_every`` rounds; ``reliable`` as in `pagerank`.
+    Estimates only decrease, so a state equal to the one at the
+    previous cut is the fixpoint: `_iterate`'s limit-1 probe on each
+    cut round early-exits the remaining rounds — identical output,
+    and at most one probe per cut, over materialized states only."""
     if rounds < 1:
         raise ValueError(f"need >= 1 round, got {rounds}")
     if checkpoint_every < 1:
@@ -674,57 +745,30 @@ def coreness(
         )
     from pyspark.sql import Window
 
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-        )
-        .distinct()
-    )
-    e = _cut(
-        und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(
-            und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        ),
-        reliable,
-    )
-    c = e.groupBy(F.col("src").alias("node")).agg(
+    sym = _symmetric(edges, src, dst, reliable)
+    start = sym.groupBy(F.col("a").alias("node")).agg(
         F.count("*").cast("bigint").alias("c")
     )
     w = Window.partitionBy("u").orderBy(F.desc("cv"))
-    for i in range(rounds):
-        nb = e.join(
-            c.select(F.col("node").alias("dst"), F.col("c").alias("cv")),
-            "dst",
-        ).select(F.col("src").alias("u"), "cv")
-        c_new = (
+
+    def h_index(c: DataFrame) -> DataFrame:
+        nb = sym.join(
+            c.select(F.col("node").alias("b"), F.col("c").alias("cv")), "b"
+        ).select(F.col("a").alias("u"), "cv")
+        return (
             nb.withColumn("rn", F.row_number().over(w).cast("bigint"))
             .groupBy(F.col("u").alias("node"))
             .agg(F.max(F.least("rn", "cv")).alias("c"))
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < rounds:
-            c_new = _cut(c_new, reliable)
-        if i + 1 < rounds:
-            # fixpoint probe (r15): c_{i+1} is a pure function of c_i,
-            # so an unchanged round makes every remaining round the
-            # identity — one limit-1 join over the (cut or one bounded
-            # step off cut) states decides. The node set is invariant
-            # (every node keeps >= 1 edge by construction), so the
-            # inner join covers it.
-            changed = (
-                c_new.join(
-                    c.select("node", F.col("c").alias("c_prev")), "node"
-                )
-                .filter(F.col("c") != F.col("c_prev"))
-                .limit(1)
-            )
-            c = c_new
-            if not changed.collect():
-                break
-        else:
-            c = c_new
+
+    def lowered(prev: DataFrame, new: DataFrame) -> DataFrame:
+        # the node set is invariant (every node keeps >= 1 edge by
+        # construction), so the inner join covers it
+        return new.join(
+            prev.select("node", F.col("c").alias("c_prev")), "node"
+        ).filter(F.col("c") != F.col("c_prev"))
+
+    c = _iterate(start, h_index, rounds, reliable, checkpoint_every, lowered)
     return c.select("node", F.col("c").alias("coreness"))
 
 
@@ -775,6 +819,17 @@ def _canonical_edges(
         )
         .distinct(),
         reliable,
+    )
+
+
+def _symmetric(
+    edges: DataFrame, src: str, dst: str, reliable: bool
+) -> DataFrame:
+    """(a, b): the undirected simple graph of `_canonical_edges` in both
+    orientations — two projections of the one materialized edge set."""
+    und = _canonical_edges(edges, src, dst, reliable)
+    return und.selectExpr("u AS a", "v AS b").unionByName(
+        und.selectExpr("v AS a", "u AS b")
     )
 
 
@@ -930,7 +985,6 @@ def k_truss(
     dst: str = "dst",
     k: int = 4,
     rounds: int = 4,
-    checkpoint_every: int = 1,
     reliable: bool = False,
 ) -> DataFrame:
     """(u, v), u < v: the k-truss of the undirected simple graph
@@ -958,8 +1012,8 @@ def k_truss(
     three edges was removed, so the maintained set stays equal to a
     full re-enumeration round for round while the O(m^1.5) wedge
     join runs exactly once. An empty removal set is the fixpoint;
-    the remaining rounds are identities and are skipped (one limit-1
-    probe per round over the already-materialized flag frame).
+    the remaining rounds are identities and are skipped (`_iterate`'s
+    limit-1 probe per round over the materialized flag frame).
     Removal cascades (an edge losing its support can strip a
     neighbor's), so `rounds` must reach the fixpoint — on every test
     graph and the co-supply backbone the peeling is stable by round
@@ -974,11 +1028,17 @@ def k_truss(
     long pairs); per round one explode-to-3 + combinable count, one
     join-back filter over the cut edge set, and three anti-joins of
     the triangle set against the just-removed edges (AQE broadcasts
-    them once peeling localizes). The survivor edge set and triangle
-    set are lineage-cut every round (``reliable`` as in `pagerank`);
-    ``checkpoint_every`` is accepted for signature compatibility but
-    ignored — the delta structure needs both per-round cuts anyway
-    (a DeprecationWarning fires on non-default values)."""
+    them once peeling localizes). The flagged edge set and triangle
+    set are lineage-cut every round (``reliable`` as in `pagerank`):
+    the delta structure references both several times per round.
+
+    Memory bound: the maintained triangle set holds 6 longs per
+    triangle — O(m^1.5) rows on the worst-case graph with m edges —
+    as localCheckpoint blocks (or reliable checkpoint files) for the
+    whole peel, where a per-round re-enumeration would stream them
+    into the support aggregate. Dense or hub-heavy graphs pay that in
+    executor storage; size it as 48 bytes × the round-0 triangle
+    count (`triangle_count` gives 3× that summed over nodes)."""
     if k < 3:
         raise ValueError(
             f"k must be >= 3 (k-2 triangles per edge; k={k} keeps "
@@ -986,20 +1046,6 @@ def k_truss(
         )
     if rounds < 1:
         raise ValueError(f"need >= 1 round, got {rounds}")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
-    if checkpoint_every != 1:
-        import warnings
-
-        warnings.warn(
-            "k_truss ignores checkpoint_every since the r15 delta "
-            "triangle maintenance: the survivor and triangle frames "
-            "are cut every round structurally",
-            DeprecationWarning,
-            stacklevel=2,
-        )
     e = _canonical_edges(edges, src, dst, reliable)
     tri_raw, _ = _oriented_triangles(e, reliable)
     # (c, s, t) is rank-ordered, not id-ordered — canonicalize the
@@ -1015,56 +1061,45 @@ def k_truss(
         ),
         reliable,
     )
-    for r in range(rounds):
-        pairs = (
-            tri.select(F.col("p1u").alias("u"), F.col("p1v").alias("v"))
-            .unionByName(
-                tri.select(F.col("p2u").alias("u"), F.col("p2v").alias("v"))
+    corners = ("p1", "p2", "p3")
+
+    def peel(edges_now: DataFrame) -> DataFrame:
+        nonlocal tri
+        if "keep" in edges_now.columns:
+            # every round after the first: drop the triangles that lost
+            # an edge in the last one, then keep only its survivors
+            removed = edges_now.filter("NOT keep")
+            for p in corners:
+                tri = tri.join(
+                    removed.select(
+                        F.col("u").alias(p + "u"), F.col("v").alias(p + "v")
+                    ),
+                    [p + "u", p + "v"],
+                    "left_anti",
+                )
+            tri = _cut(tri, reliable)
+            edges_now = edges_now.filter("keep").select("u", "v")
+        pairs = tri.select(F.col("p1u").alias("u"), F.col("p1v").alias("v"))
+        for p in corners[1:]:
+            pairs = pairs.unionByName(
+                tri.select(
+                    F.col(p + "u").alias("u"), F.col(p + "v").alias("v")
+                )
             )
-            .unionByName(
-                tri.select(F.col("p3u").alias("u"), F.col("p3v").alias("v"))
-            )
-        )
         sup = pairs.groupBy("u", "v").agg(F.count("*").alias("support"))
-        flagged = _cut(
-            e.join(sup, ["u", "v"], "left").select(
-                "u",
-                "v",
-                (F.coalesce("support", F.lit(0)) >= k - 2).alias("keep"),
-            ),
-            reliable,
+        return edges_now.join(sup, ["u", "v"], "left").select(
+            "u",
+            "v",
+            (F.coalesce("support", F.lit(0)) >= k - 2).alias("keep"),
         )
-        e = flagged.filter("keep").select("u", "v")
-        if r == rounds - 1:
-            break
-        removed = flagged.filter("NOT keep").select("u", "v")
-        if not removed.limit(1).collect():
-            break  # fixpoint: every remaining round is the identity
-        tri = _cut(
-            tri.join(
-                removed.select(
-                    F.col("u").alias("p1u"), F.col("v").alias("p1v")
-                ),
-                ["p1u", "p1v"],
-                "left_anti",
-            )
-            .join(
-                removed.select(
-                    F.col("u").alias("p2u"), F.col("v").alias("p2v")
-                ),
-                ["p2u", "p2v"],
-                "left_anti",
-            )
-            .join(
-                removed.select(
-                    F.col("u").alias("p3u"), F.col("v").alias("p3v")
-                ),
-                ["p3u", "p3v"],
-                "left_anti",
-            ),
-            reliable,
-        )
-    return e
+
+    flagged = _iterate(
+        e, peel, rounds, reliable,
+        # no edge removed is the fixpoint: every remaining round is the
+        # identity
+        fixpoint=lambda _, new: new.filter("NOT keep"),
+    )
+    return flagged.filter("keep").select("u", "v")
 
 
 def k_truss_sql(edge_sql: str, k: int = 4, rounds: int = 4) -> str:
@@ -1111,7 +1146,6 @@ def neighborhood_function(
     dst: str = "dst",
     d: int = 3,
     lg_k: int = 12,
-    checkpoint_every: int = 1,
     reliable: bool = False,
 ) -> DataFrame:
     """(node, reach_est): the approximate neighborhood function —
@@ -1131,8 +1165,8 @@ def neighborhood_function(
     list + one combinable ``hll_union_agg`` — DataSketches HLL unions
     are register-wise max, so the aggregate is associative,
     commutative and map-side partial like any sum), fixed ``d``
-    rounds, lineage cut per ``checkpoint_every`` (``reliable`` as in
-    `pagerank`). The estimate is insertion-ORDER invariant (register
+    rounds, lineage cut per round (``reliable`` as in `pagerank`).
+    The estimate is insertion-ORDER invariant (register
     max), so results are deterministic for fixed input.
 
     Accuracy: relative standard error ≈ 1.04/√2^lg_k (~1.6% at the
@@ -1143,30 +1177,23 @@ def neighborhood_function(
     g9_neighborhood_anf)."""
     if d < 1:
         raise ValueError(f"need d >= 1 hop, got {d}")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
-    und = _canonical_edges(edges, src, dst, reliable)
-    sym = und.selectExpr("u AS a", "v AS b").unionByName(
-        und.selectExpr("v AS a", "u AS b")
-    )
+    sym = _symmetric(edges, src, dst, reliable)
     nodes = sym.select(F.col("a").alias("node")).distinct()
-    state = nodes.groupBy("node").agg(
+    start = nodes.groupBy("node").agg(
         F.expr(f"hll_sketch_agg(node, {int(lg_k)})").alias("hll")
     )
-    for r in range(d):
+
+    def spread(state: DataFrame) -> DataFrame:
         contrib = sym.join(state, sym.b == state.node).select(
             F.col("a").alias("node"), "hll"
         )
-        state = (
+        return (
             state.unionByName(contrib)
             .groupBy("node")
             .agg(F.expr("hll_union_agg(hll)").alias("hll"))
         )
-        if (r + 1) % checkpoint_every == 0 or r == d - 1:
-            state = _cut(state, reliable)
-    return state.select(
+
+    return _iterate(start, spread, d, reliable).select(
         "node",
         F.expr("CAST(ROUND(hll_sketch_estimate(hll)) AS BIGINT)").alias(
             "reach_est"
@@ -1181,7 +1208,6 @@ def bfs_reach_counts(
     dst: str = "dst",
     seed_col: str = "node",
     d: int = 3,
-    checkpoint_every: int = 1,
     reliable: bool = False,
 ) -> DataFrame:
     """(node, reach): EXACT |{u : dist(node, u) <= d}|, self included,
@@ -1195,22 +1221,20 @@ def bfs_reach_counts(
     SQL-expressible; the g9 oracle unrolls exactly this loop."""
     if d < 1:
         raise ValueError(f"need d >= 1 hop, got {d}")
-    und = _canonical_edges(edges, src, dst, reliable)
-    sym = und.selectExpr("u AS a", "v AS b").unionByName(
-        und.selectExpr("v AS a", "u AS b")
-    )
-    pairs = _cut(
+    sym = _symmetric(edges, src, dst, reliable)
+    start = _cut(
         seeds.select(F.col(seed_col).alias("seed")).distinct()
         .select("seed", F.col("seed").alias("node")),
         reliable,
     )
-    for r in range(d):
-        step = pairs.join(sym, pairs.node == sym.a).select(
+
+    def expand(pairs: DataFrame) -> DataFrame:
+        hop = pairs.join(sym, pairs.node == sym.a).select(
             "seed", F.col("b").alias("node")
         )
-        pairs = pairs.unionByName(step).distinct()
-        if (r + 1) % checkpoint_every == 0 or r == d - 1:
-            pairs = _cut(pairs, reliable)
+        return pairs.unionByName(hop).distinct()
+
+    pairs = _iterate(start, expand, d, reliable)
     return pairs.groupBy("seed").agg(
         F.count("*").cast("bigint").alias("reach")
     ).select(F.col("seed").alias("node"), "reach")
@@ -1224,7 +1248,6 @@ def sssp(
     weight: str | None = None,
     seed_col: str = "node",
     rounds: int = 6,
-    checkpoint_every: int = 1,
     reliable: bool = False,
     assume_normalized: bool = False,
     cut_input: bool = True,
@@ -1250,7 +1273,7 @@ def sssp(
     Per round ONE equi-join of the reached-node state onto the edge
     list (state.node = edges.src) + ONE combinable min aggregate —
     map-side partials, no windows, no driver loop state; lineage cut
-    per ``checkpoint_every`` rounds (``reliable`` as in `pagerank`).
+    per round (``reliable`` as in `pagerank`).
     At 100 TB this is the plan you want: the state is (node, BIGINT),
     the join shuffles on the node key, and a hub's fan-out lands in
     the min-combine's partial aggregation.
@@ -1263,9 +1286,11 @@ def sssp(
     dist after round r is still the min over ≤r-hop paths
     (property-tested equal to the full relax on random graphs). Per
     round it trades the full-edge relax join for a frontier-incident
-    one plus a node-keyed diff join (both sides fresh groupBy outputs,
-    so the diff reuses the hash partitioning), and BAILS OUT when the
-    frontier empties — a fixpoint, further rounds are no-ops. The win
+    one — the frontier is an ``improved`` flag the min aggregate
+    computes against each key's previous dist, read back as a filter
+    of the materialized state — and BAILS OUT when the frontier
+    empties (dists only decrease, so this is `_iterate`'s monotone
+    fixpoint probe): further rounds are no-ops. The win
     grows with how early distances settle (on the trade graph most
     settle in 2-3 of g11's 8 rounds); full-state relax remains the
     default for small fixed round counts where the extra diff join
@@ -1298,10 +1323,6 @@ def sssp(
     contract. `frontier` composes: the diff join keys (seed, node)."""
     if rounds < 1:
         raise ValueError(f"need >= 1 relaxation round, got {rounds}")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
     if weight is not None:
         wtype = edges.schema[weight].dataType.simpleString()
         if wtype not in ("tinyint", "smallint", "int", "bigint"):
@@ -1315,26 +1336,12 @@ def sssp(
         if weight is None
         else F.col(weight).cast("bigint")
     )
-    if assume_normalized:
-        e = edges.select(
-            F.col(src).alias("src"), F.col(dst).alias("dst"),
-            w_col.alias("w"),
-        )
-        if cut_input:
-            e = _cut(e, reliable)
-    else:
-        e = _cut(
-            edges.select(
-                F.col(src).alias("src"), F.col(dst).alias("dst"),
-                w_col.alias("w"),
-            )
-            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .filter(F.col("src") != F.col("dst"))
-            .filter(F.col("w").isNotNull())
-            .groupBy("src", "dst")
-            .agg(F.min("w").alias("w")),
-            reliable,
-        )
+    # duplicate (src, dst) rows collapse by MIN(w): shortest-path-correct
+    e = _edge_list(
+        edges, src, dst, reliable, assume_normalized, cut_input,
+        w=w_col, combine=F.min,
+    )
+    if not assume_normalized:
         min_w, max_w = e.agg(F.min("w"), F.max("w")).first()
         if min_w is not None and int(min_w) <= 0:
             raise ValueError(
@@ -1348,60 +1355,48 @@ def sssp(
                 "int64 headroom for the longest representable path — "
                 "re-scale costs or lower rounds"
             )
-    seed_nodes = seeds.select(F.col(seed_col).alias("node")).distinct()
+    keys = ["seed", "node"] if per_seed else ["node"]
+    start = seeds.select(F.col(seed_col).alias("node")).distinct()
     if per_seed:
-        seed_nodes = seed_nodes.select(
-            F.col("node").alias("seed"), "node"
-        )
-    state = _cut(
-        seed_nodes.withColumn("dist", F.lit(0).cast("bigint")),
+        start = start.select(F.col("node").alias("seed"), "node")
+    start = _cut(
+        start.select(
+            *keys,
+            F.lit(0).cast("bigint").alias("dist"),
+            F.lit(True).alias("improved"),
+        ),
         reliable,
     )
-    keys = ["seed", "node"] if per_seed else ["node"]
-    changed = state
-    for r in range(rounds):
-        src_state = changed if frontier else state
-        relaxed = src_state.join(e, src_state.node == e.src).select(
+
+    def relax(state: DataFrame) -> DataFrame:
+        front = state.filter("improved") if frontier else state
+        relaxed = front.join(e, front.node == e.src).select(
             *(["seed"] if per_seed else []),
             F.col("dst").alias("node"),
             (F.col("dist") + F.col("w")).alias("dist"),
+            F.lit(None).cast("bigint").alias("old"),
         )
-        new_state = (
-            state.unionByName(relaxed)
+        # `old` survives the min only from the state row: NULL for a
+        # key reached for the first time
+        return (
+            state.select(*keys, "dist", F.col("dist").alias("old"))
+            .unionByName(relaxed)
             .groupBy(*keys)
-            .agg(F.min("dist").alias("dist"))
-        )
-        cut_now = (r + 1) % checkpoint_every == 0 or r == rounds - 1
-        if cut_now:
-            new_state = _cut(new_state, reliable)
-        if frontier:
-            # the next frontier: keys whose dist is NEW or improved.
-            # Both sides are key-hashed aggregate/cut outputs, so the
-            # diff join reuses the hash partitioning (no extra
-            # exchange). NOT cut (r14 opt): the diff is one bounded
-            # join off two checkpointed frames, the emptiness probe
-            # early-exits (limit-1) instead of materializing it, and
-            # the next round's relax computes it once inside its own
-            # job — one fewer eager localCheckpoint job per round.
-            changed = (
-                new_state.join(
-                    state.withColumnRenamed("dist", "__old"),
-                    keys,
-                    "left",
-                )
-                .filter(
-                    F.col("__old").isNull()
-                    | (F.col("dist") < F.col("__old"))
-                )
-                .select(*keys, "dist")
+            .agg(F.min("dist").alias("dist"), F.min("old").alias("old"))
+            .select(
+                *keys,
+                "dist",
+                (
+                    F.col("old").isNull() | (F.col("dist") < F.col("old"))
+                ).alias("improved"),
             )
-            state = new_state
-            if changed.isEmpty():
-                # fixpoint: every remaining round would relax nothing
-                break
-        else:
-            state = new_state
-    return state
+        )
+
+    state = _iterate(
+        start, relax, rounds, reliable,
+        fixpoint=(lambda _, new: new.filter("improved")) if frontier else None,
+    )
+    return state.select(*keys, "dist")
 
 
 def sssp_sql(
@@ -1543,7 +1538,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 5,
-    checkpoint_every: int = 1,
     assume_normalized: bool = False,
     cut_input: bool = True,
     reliable: bool = False,
@@ -1582,7 +1576,7 @@ def label_propagation(
     needs a per-partition SORT (spillable at scale), the min_by
     aggregate partial-aggregates map-side (measured ~11% faster on
     the sf0.1 backbone, labels bit-identical). Lineage cut per
-    ``checkpoint_every`` iterations. ``assume_normalized``,
+    iteration. ``assume_normalized``,
     ``cut_input`` and ``reliable`` as in `pagerank` (an `od` column,
     if present, is ignored).
 
@@ -1591,7 +1585,8 @@ def label_propagation(
     function of its in-neighbor + own label multiset, so a parity-p
     node needs re-evaluation ONLY if some in-neighbor or the node
     itself changed label in the two half-steps since parity p last
-    updated (the "touch" set). Per half-step: if touch is EMPTY the
+    updated (the "touch" set, kept as two change flags on the
+    materialized label state). Per half-step: if touch is EMPTY the
     state is a joint fixpoint for both parities and the remaining
     half-steps are provably no-ops — bail out; if touch is larger
     than ``frontier_threshold`` × |nodes| the full vote pass is
@@ -1604,38 +1599,13 @@ def label_propagation(
     profile is 14974/921/14138/655/1524/0/0/0/0/0 per half-step —
     the last five half-steps of the g3 shape are no-ops and one more
     is a ~4% subset, which is the win this mode harvests. Costs one
-    changed-set diff join + one touch count per EVALUATED half-step;
+    change-flag join + one touch count per EVALUATED half-step;
     wrong for nothing, but pointless when iterations is small AND the
     graph churns to the end — measure per workload."""
     if iterations < 1:
         raise ValueError(f"need >= 1 iteration, got {iterations}")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
-    if assume_normalized:
-        # as in `pagerank`: skip the dedup semantics, keep the cut
-        # unless the caller vouches the input is materialized — ten
-        # half-steps each re-scan the edge list, and an uncut raw
-        # input re-runs the caller's whole build chain per scan
-        e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        if cut_input:
-            e = _cut(e, reliable)
-    else:
-        e = _cut(
-            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .filter(F.col("src") != F.col("dst"))
-            .distinct(),
-            reliable,
-        )
-    nodes = _cut(
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct(),
-        reliable,
-    )
-    labels = nodes.select("node", F.col("node").alias("label"))
+    e = _edge_list(edges, src, dst, reliable, assume_normalized, cut_input)
+    nodes = _node_set(e, reliable)
     # argmax by (cnt DESC, label ASC) as a single combinable aggregate:
     # min over (-cnt, label). -cnt cannot overflow (cnt >= 1); the
     # node ids themselves are never negated, so the full INTEGRAL
@@ -1644,116 +1614,91 @@ def label_propagation(
         "label", F.struct((-F.col("cnt")).alias("nc"), F.col("label"))
     )
 
-    def full_votes(parity: int) -> DataFrame:
-        return (
-            e.join(
-                labels.select(F.col("node").alias("src"), "label"),
-                "src",
+    def relabel(
+        labels: DataFrame, parity: int, affected: DataFrame | None = None
+    ) -> DataFrame:
+        """One half-step: the parity nodes (or only ``affected`` ones)
+        take their vote winner; every other node keeps its label."""
+        par = F.pmod("node", F.lit(2)) == parity
+        if affected is None:
+            e_in, own, rest = e, labels.filter(par), labels.filter(~par)
+        else:
+            e_in = e.join(affected.withColumnRenamed("node", "dst"), "dst")
+            own = labels.join(affected, "node")
+            rest = labels.join(affected, "node", "left_anti")
+        votes = (
+            e_in.join(
+                labels.select(F.col("node").alias("src"), "label"), "src"
             )
             .select(F.col("dst").alias("node"), "label")
-            .filter(F.pmod("node", F.lit(2)) == parity)
+            .filter(par)
             # a node's own current label votes once: stabilizes
             # singletons and nodes with no in-edges
-            .unionByName(
-                labels.filter(F.pmod("node", F.lit(2)) == parity)
-            )
+            .unionByName(own)
             .groupBy("node", "label")
             .agg(F.count("*").alias("cnt"))
         )
+        return votes.groupBy("node").agg(winner.alias("label")).unionByName(
+            rest
+        )
 
+    start = nodes.select("node", F.col("node").alias("label"))
     if not frontier:
-        for i in range(iterations):
-            for parity in (0, 1):
-                updated = full_votes(parity).groupBy("node").agg(
-                    winner.alias("label")
-                )
-                labels = updated.unionByName(
-                    labels.filter(F.pmod("node", F.lit(2)) != parity)
-                )
-            if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-                labels = _cut(labels, reliable)
-        return labels
+        return _iterate(
+            start, lambda labels: relabel(relabel(labels, 0), 1),
+            iterations, reliable,
+        )
 
-    # delta mode: the state is materialized per half-step (the diff
-    # join, the touch probe, and the next half-step all re-reference
-    # it), so checkpoint_every does not apply here
-    labels = _cut(labels, reliable)
-    n_nodes = labels.count()
-    # a node's first evaluation must see everything as changed
-    changed_last = labels.select("node")
-    changed_prev = labels.select("node").limit(0)
-    done = False
-    for _ in range(iterations):
-        if done:
-            break
-        for parity in (0, 1):
-            # nodes whose label changed in the two half-steps since
-            # this parity last updated. NOT cut (r14 opt): both inputs
-            # are one bounded step off checkpointed state, so the
-            # union+distinct re-runs at most twice (the count probe
-            # and the affected join) inside consumer jobs — cheaper
-            # than an eager localCheckpoint job per half-step.
-            touch = changed_last.unionByName(changed_prev).distinct()
-            n_touch = touch.count()
-            if n_touch == 0:
-                # joint fixpoint: no vote multiset can differ from the
-                # last evaluation of either parity — every remaining
-                # half-step is a no-op
-                done = True
-                break
-            par = F.pmod("node", F.lit(2)) == parity
-            if n_touch > frontier_threshold * n_nodes:
-                # wide churn: the full vote pass is cheaper than delta
-                # bookkeeping (labels identical either way)
-                updated = full_votes(parity).groupBy("node").agg(
-                    winner.alias("label")
-                )
-                new_labels = updated.unionByName(labels.filter(~par))
-            else:
-                # only in-neighbors of a changed node (or a changed
-                # node itself, whose own vote moved) can re-label
-                affected = _cut(
-                    e.join(touch.withColumnRenamed("node", "src"), "src")
-                    .select(F.col("dst").alias("node"))
-                    .unionByName(touch)
-                    .filter(par)
-                    .distinct(),
-                    reliable,
-                )
-                e_aff = e.join(
-                    affected.withColumnRenamed("node", "dst"), "dst"
-                )
-                votes = (
-                    e_aff.join(
-                        labels.select(F.col("node").alias("src"), "label"),
-                        "src",
-                    )
-                    .select(F.col("dst").alias("node"), "label")
-                    .unionByName(labels.join(affected, "node"))
-                    .groupBy("node", "label")
-                    .agg(F.count("*").alias("cnt"))
-                )
-                updated = votes.groupBy("node").agg(winner.alias("label"))
-                new_labels = updated.unionByName(
-                    labels.join(affected, "node", "left_anti")
-                )
-            new_labels = _cut(new_labels, reliable)
-            # the changed set stays LAZY (r14 opt): one join+filter
-            # over two checkpointed label frames, re-run at most twice
-            # (as changed_last then changed_prev inside later touch
-            # unions) — dropping its per-half-step eager cut job
-            # halves the delta loop's materialization count together
-            # with the touch change above (labels bit-equal; A/B'd)
-            changed_now = (
-                new_labels.join(
-                    labels.withColumnRenamed("label", "__old"), "node"
-                )
-                .filter(F.col("label") != F.col("__old"))
-                .select("node")
+    # delta mode: one round per half-step. The state carries two change
+    # flags — `ch`: the label changed in the last half-step, `ch2`: in
+    # the one before — so the touch set is a filter of materialized
+    # state; a node's first evaluation must see everything as changed
+    n_nodes = nodes.count()
+    parities = itertools.cycle((0, 1))
+
+    def delta_half_step(state: DataFrame) -> DataFrame:
+        parity = next(parities)
+        touch = state.filter("ch OR ch2").select("node")
+        n_touch = touch.count()
+        if n_touch == 0:
+            # joint fixpoint: no vote multiset can differ from the last
+            # evaluation of either parity — every remaining half-step
+            # is a no-op
+            return state
+        labels = state.select("node", "label")
+        if n_touch > frontier_threshold * n_nodes:
+            # wide churn: the full vote pass is cheaper than delta
+            # bookkeeping (labels identical either way)
+            new = relabel(labels, parity)
+        else:
+            # only in-neighbors of a changed node (or a changed node
+            # itself, whose own vote moved) can re-label
+            affected = _cut(
+                e.join(touch.withColumnRenamed("node", "src"), "src")
+                .select(F.col("dst").alias("node"))
+                .unionByName(touch)
+                .filter(F.pmod("node", F.lit(2)) == parity)
+                .distinct(),
+                reliable,
             )
-            changed_prev, changed_last = changed_last, changed_now
-            labels = new_labels
-    return labels
+            new = relabel(labels, parity, affected)
+        return new.join(
+            state.select(
+                "node", F.col("label").alias("__old"), F.col("ch").alias("ch2")
+            ),
+            "node",
+        ).select(
+            "node",
+            "label",
+            (F.col("label") != F.col("__old")).alias("ch"),
+            "ch2",
+        )
+
+    start = start.select(
+        "node", "label", F.lit(True).alias("ch"), F.lit(False).alias("ch2")
+    )
+    labels = _iterate(start, delta_half_step, 2 * iterations, reliable)
+    return labels.select("node", "label")
 
 
 def label_propagation_sql(edge_sql: str, iterations: int = 5) -> str:
@@ -1887,7 +1832,6 @@ def hits(
     dst: str = "dst",
     iterations: int = 8,
     scale: int = 10**6,
-    checkpoint_every: int = 1,
     cut_input: bool = True,
     assume_normalized: bool = False,
     reliable: bool = False,
@@ -1935,10 +1879,9 @@ def hits(
     state, so an uncut raw made every half-step's join + aggregate
     execute twice — once in the broadcast build, once in the consuming
     pass (r14 opt, measured ~1.7× on g14). The per-half-step cut also
-    truncates lineage, so ``checkpoint_every`` is accepted for
-    compatibility but IGNORED since r14 — the hub/auth frames are free
-    projections one broadcast join off materialized state.
-    Self-loops dropped,
+    truncates lineage — the hub/auth frames are free projections one
+    broadcast join off materialized state — so `_iterate` adds no cut
+    of its own. Self-loops dropped,
     duplicate edges collapsed (a duplicate would double-count
     endorsement); NULL endpoints dropped.
     ``assume_normalized=True`` vouches the input is already distinct,
@@ -1959,20 +1902,6 @@ def hits(
     """
     if iterations < 1:
         raise ValueError(f"need >= 1 iteration, got {iterations}")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
-    if checkpoint_every != 1:
-        import warnings
-
-        warnings.warn(
-            "hits ignores checkpoint_every since the r14 raw-state "
-            "cut: the score state is cut every half-step structurally "
-            "(the knob is accepted for signature compatibility only)",
-            DeprecationWarning,
-            stacklevel=2,
-        )
     if not 0 < int(scale) <= 10**9:
         # first-step raw sums reach n_src · scale; multiplied by scale
         # for normalization they must stay inside int64. 1e9 leaves
@@ -1983,17 +1912,7 @@ def hits(
             f"src/dst types differ: {edges.schema[src].dataType} vs "
             f"{edges.schema[dst].dataType}"
         )
-    if assume_normalized:
-        e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    else:
-        e = (
-            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-    if cut_input:
-        e = _cut(e, reliable)
+    e = _edge_list(edges, src, dst, reliable, assume_normalized, cut_input)
     if n_nodes is None or n_src is None:
         # ONE pass over the edges for both guards: distinct src count
         # (int64 headroom on the un-normalized first step) and distinct
@@ -2054,9 +1973,8 @@ def hits(
         # inside the broadcast build, once in the consuming pass
         # (measured on g14 at sf0.1: ~5.8-6.4 s → ~3.4 s median,
         # scores identical). The cut also truncates lineage at every
-        # half-step, which is why the old per-iteration hub-state cut
-        # (checkpoint_every) is gone: the hub/auth frames are now free
-        # projections one broadcast join off materialized raw state.
+        # half-step: the hub/auth frames are free projections one
+        # broadcast join off materialized raw state.
         raw = _cut(raw, reliable)
         total = raw.agg(F.sum("raw").alias("__t"))
         return (
@@ -2071,8 +1989,9 @@ def hits(
         F.col("src").alias("node"),
         F.lit(int(scale)).cast("bigint").alias("score_fp"),
     )
-    auths = None
-    for i in range(iterations):
+
+    def iteration(scores: tuple) -> tuple:
+        hubs, _ = scores
         raw_a = (
             e.join(hubs.select(F.col("node").alias("src"), "score_fp"), "src")
             .groupBy(F.col("dst").alias("node"))
@@ -2086,7 +2005,11 @@ def hits(
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("score_fp").alias("raw"))
         )
-        hubs = _normalize(raw_h)
+        return _normalize(raw_h), auths
+
+    hubs, auths = _iterate(
+        (hubs, None), iteration, iterations, reliable, cut_every=0
+    )
     return hubs.select(
         "node", F.lit("hub").alias("side"), "score_fp"
     ).unionByName(

@@ -3731,8 +3731,6 @@ def test_label_propagation_bit_equal_structure_and_guards(spark):
 
     with pytest.raises(ValueError, match="iteration"):
         graph.label_propagation(df, iterations=0)
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        graph.label_propagation(df, checkpoint_every=0)
 
 
 def test_hits_structure_determinism_and_guards(spark):
@@ -3783,8 +3781,6 @@ def test_hits_structure_determinism_and_guards(spark):
 
     with pytest.raises(ValueError, match="iteration"):
         graph.hits(df, iterations=0)
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        graph.hits(df, checkpoint_every=0)
     with pytest.raises(ValueError, match="scale"):
         graph.hits(df, scale=10**10)
     with pytest.raises(ValueError, match="headroom"):
@@ -3911,9 +3907,10 @@ def test_pagerank_assume_normalized_bit_equal(spark):
 def test_pagerank_node_vouch_debug_guard(spark):
     """The nodes=/n_nodes= vouching contract's opt-in re-check
     (debug_vouch=True): a correct vouch ranks bit-equal to the
-    self-computed node set; a stale n_nodes and a node frame missing
-    an edge endpoint both raise loudly instead of silently misranking
-    (teleport mass splits by n_nodes)."""
+    self-computed node set; a stale n_nodes, a node frame missing an
+    edge endpoint and one holding a node no edge touches all raise
+    loudly instead of silently misranking (teleport mass splits by
+    n_nodes)."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -3953,6 +3950,13 @@ def test_pagerank_node_vouch_debug_guard(spark):
             nodes=partial,
             n_nodes=partial.count(),
             debug_vouch=True,
+        )
+    # the g14-style misuse: a node set built from the UNFILTERED edges,
+    # handed a filtered edge list — a strict superset of its endpoints
+    filtered = e.filter(F.col("src") != 0).localCheckpoint()
+    with pytest.raises(ValueError, match="no endpoint"):
+        graph.pagerank(
+            filtered, iterations=4, nodes=nodes, n_nodes=n, debug_vouch=True
         )
 
 
@@ -4493,6 +4497,61 @@ def test_coreness_known_graphs_twin_and_kcore_consistency(spark):
         graph.coreness(df, checkpoint_every=0)
 
 
+def test_coreness_probes_only_on_cut_rounds(spark):
+    """The fixpoint probe runs on cut rounds only. Coreness settles one
+    hop per round on a path, so a 40-node path never reaches its
+    fixpoint in 10 rounds: with checkpoint_every=2 the rounds cut are
+    2, 4, 6 and 8 (never the last), so the call may issue at most 4
+    limit-1 probes — a probe every round would issue 9, half of them
+    re-running an uncut round. The truncated result still equals the
+    unrolled DuckDB twin."""
+    import duckdb
+
+    from ad_data_pipelines_spark.operators import graph
+
+    path = [(i, i + 1) for i in range(39)]
+    df = spark.createDataFrame(path, "src bigint, dst bigint")
+    sc = spark.sparkContext
+    group = "test_coreness_probe_cadence"
+    sc.setJobGroup(group, group)
+    try:
+        got = sorted(
+            map(
+                tuple,
+                graph.coreness(df, rounds=10, checkpoint_every=2).collect(),
+            )
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    vals = ", ".join(f"({a},{b})" for a, b in path)
+    want = sorted(
+        duckdb.connect()
+        .execute(
+            graph.coreness_sql(
+                f"SELECT * FROM (VALUES {vals}) t(src, dst)", rounds=10
+            )
+        )
+        .fetchall()
+    )
+    assert got == want
+    assert {c for _, c in got} == {1, 2}  # not the fixpoint (all 1)
+
+    # one SQL execution per action; a probe is the one whose plan
+    # collects under a limit
+    job_ids = sc.statusTracker().getJobIdsForGroup(group)
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    actions = [
+        execs.apply(i)
+        for i in range(execs.size())
+        if any(execs.apply(i).jobs().contains(j) for j in job_ids)
+    ]
+    probes = [
+        x for x in actions if "CollectLimit" in x.physicalPlanDescription()
+    ]
+    assert actions and len(probes) <= 4, len(probes)
+
+
 def test_basket_pairs_counts_guard_and_cap(spark):
     """Market-basket pair projection (graph.basket_pairs): pair counts
     match the by-hand enumeration, duplicates within a basket collapse,
@@ -4621,8 +4680,8 @@ def test_k_truss_known_graphs_twin_and_guards(spark):
     fixpoint holds (rounds vs rounds+1); results are bit-equal to the
     unrolled AS-MATERIALIZED DuckDB twin on a triangle-rich bridged-
     clique graph; and every k-truss sits inside the (k-1)-core
-    (cross-operator consistency). Guards: k < 3, rounds < 1,
-    checkpoint_every < 1 raise."""
+    (cross-operator consistency). Guards: k < 3 and rounds < 1
+    raise."""
     import itertools
 
     import duckdb
@@ -4685,8 +4744,6 @@ def test_k_truss_known_graphs_twin_and_guards(spark):
         graph.k_truss(df, k=2)
     with pytest.raises(ValueError, match="round"):
         graph.k_truss(df, rounds=0)
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        graph.k_truss(df, checkpoint_every=0)
 
 
 def test_k_truss_delta_maintenance_cascade(spark):
@@ -4762,8 +4819,7 @@ def test_neighborhood_function_and_bfs_reach(spark):
     are EXACT here: path 1-2-3-4-5 at d=2 reaches [3,4,5,4,3]; a star's
     center sees everything at d=1 and its leaves at d=2; K3,3 reaches
     all 6 at d=2. bfs_reach_counts returns rows ONLY for the seeds and
-    agrees with the sketch. Guards: d < 1 and checkpoint_every < 1
-    raise."""
+    agrees with the sketch. Guard: d < 1 raises."""
     import pytest
 
     from ad_data_pipelines_spark.operators import graph
@@ -4800,8 +4856,6 @@ def test_neighborhood_function_and_bfs_reach(spark):
 
     with pytest.raises(ValueError, match="hop"):
         graph.neighborhood_function(df, d=0)
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        graph.neighborhood_function(df, checkpoint_every=0)
     with pytest.raises(ValueError, match="hop"):
         graph.bfs_reach_counts(df, seeds, d=0)
 
@@ -4861,8 +4915,6 @@ def test_sssp_closed_forms_and_guards(spark):
     sf = spark.createDataFrame([(1,)], "node bigint")
     with pytest.raises(ValueError, match="round"):
         graph.sssp(df, sf, rounds=0)
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        graph.sssp(df, sf, checkpoint_every=0)
     frac = spark.createDataFrame(
         [(1, 2, 0.5)], "src bigint, dst bigint, c double"
     )
